@@ -460,8 +460,17 @@ def connected_components(
     # ~32 MB budget.
     probe = und.limit(small_graph_edges + 1).toPandas()
     if len(probe) <= small_graph_edges:  # both orientations: ≤1M input pairs
-        us = probe["u"].tolist()
-        vs = probe["v"].tolist()
+        # node ids must arrive as integers: Arrow hands a nullable id column
+        # over as float64 with NaN, and to_numpy would wrap NaN and truncate
+        # fractions silently, so any non-integer dtype raises here
+        for c in ("u", "v"):
+            if probe[c].dtype.kind != "i":
+                raise TypeError(
+                    f"connected_components: node ids must be non-null integers, "
+                    f"got dtype {probe[c].dtype}"
+                )
+        us = probe["u"].to_numpy(dtype="int64").tolist()
+        vs = probe["v"].to_numpy(dtype="int64").tolist()
         parent: dict = {}
 
         def find(x):

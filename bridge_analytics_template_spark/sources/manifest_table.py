@@ -31,11 +31,13 @@ Erasure plan at scale (``erase_rows``):
    standalone bounds index) range-semi-join the tombstone keys; a file whose
    envelope contains no tombstone is reused by reference without being
    opened. Range-clustered publishes make the bounds tight.
-2. EXACT AFFECTED SET — scan only the candidate files, semi-join the
-   tombstones, collect the distinct file list (bounded by file count,
-   never rows).
+2. EXACT AFFECTED SET — scan only the candidate files' key column, typed
+   from the manifest (no schema-inference job), semi-join the tombstones,
+   collect the distinct file list (bounded by file count, never rows).
 3. REWRITE survivors of affected files only (one distributed anti-join
-   write), ingest the new parts with fresh stats.
+   write). The new parts' entries come from ONE aggregation over the
+   staged parts — key bounds, declared column stats and the key bloom
+   together — with exact row counts from the parquet footers.
 4. COMMIT a new manifest: untouched entries verbatim + replacement entries.
 
 Old snapshots stay readable (audit/time-travel) until ``vacuum`` drops
@@ -182,18 +184,20 @@ def _read_entries(
 ) -> DataFrame:
     """Read the given manifest entries reconciled to ``m``'s CURRENT column
     spec: files are grouped by the generation they were written under (one
-    group per schema_id — a handful, never per-file), each group projects
-    spec columns present in its physical schema and >= their ``since``
-    generation from bytes, everything else from the column's default. A
-    manifest predating the spec machinery reads as-is."""
+    group per schema_id — a handful, never per-file), each group reads the
+    spec columns whose ``since`` generation it reaches from bytes and
+    projects everything else from the column's default. Every read is
+    typed from the manifest (the spec, or a legacy manifest's ``schema``),
+    so no schema-inference job runs: a file of generation ``sid`` was
+    written with every spec column of ``since <= sid`` (ADD is the only way
+    a column enters the spec, and a rewrite materializes the whole spec)."""
     files_dir = os.path.join(base, "files")
     columns = _columns_of(m)
     if columns is None:
+        schema = StructType.fromJson(json.loads(m["schema"]))
         if not entries:
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema"]))
-            )
-        return spark.read.parquet(
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(
             *(os.path.join(files_dir, e["file"]) for e in entries)
         )
     if not entries:
@@ -203,16 +207,14 @@ def _read_entries(
         groups.setdefault(e.get("schema_id", 1), []).append(e["file"])
     out = None
     for sid in sorted(groups):
-        df = spark.read.parquet(
+        # the key is never dropped and dates from generation 1, so every
+        # group reads at least one column from bytes
+        stored = [c for c in columns if sid >= c["since"]]
+        df = spark.read.schema(_schema_from_spec(stored)).parquet(
             *(os.path.join(files_dir, f) for f in groups[sid])
         )
-        have = set(df.columns)
         sel = [
-            (
-                F.col(c["name"])
-                if c["name"] in have and sid >= c["since"]
-                else F.lit(c["default"])
-            )
+            (F.col(c["name"]) if sid >= c["since"] else F.lit(c["default"]))
             .cast(c["type"])
             .alias(c["name"])
             for c in columns
@@ -285,6 +287,11 @@ def _next_pow2(n: int) -> int:
     return 1 << max(0, (n - 1)).bit_length()
 
 
+def _bloom_size(rows: int) -> int:
+    """Bloom bit count m for a file of ``rows`` keys (~10 bits per key)."""
+    return min(_BLOOM_MAX_BITS, max(_BLOOM_MIN_BITS, _next_pow2(10 * rows)))
+
+
 def _bloom_position_sql(key_sql: str, i: int, m_sql: str) -> str:
     """Probe position i of a key in an m-bit bloom, as a SQL fragment —
     the ONE definition both the build aggregation and the candidate-file
@@ -295,64 +302,19 @@ def _bloom_position_sql(key_sql: str, i: int, m_sql: str) -> str:
     return f"pmod(xxhash64({key_sql}, {i}), {m_sql})"
 
 
-def _bloom_positions(key_sql: str, m: int):
-    """The k probe positions as JVM columns (build side)."""
-    return [
-        F.expr(_bloom_position_sql(key_sql, i, str(m)))
-        for i in range(_BLOOM_K)
-    ]
-
-
-def _bloom_build(
-    spark: SparkSession, staging: str, key_col: str, rows_per_file: dict[str, int]
-) -> tuple[int, dict[str, str]]:
-    """One JVM pass over the staged parts: explode each key's probe
-    positions, bit_or them into 64-bit words per (file, word) — the only
-    thing the driver ever sees is |files| x (set words) of metadata, never
-    rows. Returns (m, {staged part basename: hex bitmap})."""
-    if not rows_per_file:
-        return _BLOOM_MIN_BITS, {}
-    m = min(
-        _BLOOM_MAX_BITS,
-        max(_BLOOM_MIN_BITS, _next_pow2(10 * max(rows_per_file.values()))),
-    )
-    df = spark.read.parquet(staging).select(
-        F.input_file_name().alias("_f"), F.col(key_col).alias("_k")
-    )
-    words = (
-        df.select("_f", F.explode(F.array(*_bloom_positions("_k", m))).alias("_p"))
-        .groupBy("_f", (F.col("_p") / 64).cast("long").alias("_w"))
-        .agg(
-            F.expr(
-                "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(_p % 64 AS INT)))"
-            ).alias("_bits")
-        )
-        .collect()
-    )
-    maps: dict[str, bytearray] = {}
-    for r in words:
-        name = os.path.basename(
-            r["_f"].removeprefix("file://").removeprefix("file:")
-        )
-        buf = maps.setdefault(name, bytearray(m // 8))
-        w = r["_bits"] & ((1 << 64) - 1)  # signed long -> raw bits
-        buf[8 * r["_w"] : 8 * r["_w"] + 8] = w.to_bytes(8, "little")
-    return m, {name: buf.hex() for name, buf in maps.items()}
-
-
-def _bloom_words(entry: dict) -> list[int] | None:
+def _bloom_words(entry: dict):
     """Manifest entry's bitmap as SIGNED 64-bit words (Spark LongType), or
     None for entries written before blooms existed (back-compat: no bloom
     means the file always MIGHT match)."""
+    import numpy as np
+
     hx = entry.get("bloom")
-    if not hx:
-        return None
-    raw = bytes.fromhex(hx)
-    out = []
-    for i in range(0, len(raw), 8):
-        w = int.from_bytes(raw[i : i + 8], "little")
-        out.append(w - (1 << 64) if w >= (1 << 63) else w)
-    return out
+    return np.frombuffer(bytes.fromhex(hx), "<i8") if hx else None
+
+
+def _key_type(m: dict):
+    """The table key's Spark type as the manifest records it."""
+    return StructType.fromJson(json.loads(m["schema"]))[m["key_col"]].dataType
 
 
 def _candidate_files(
@@ -364,6 +326,9 @@ def _candidate_files(
     one broadcast join (the stats side is |files| rows by construction).
     Sound (never drops a file that holds a key); the exact affected set
     still needs a scan of the survivors."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
     entries = m["files"]
     if not entries:
         return []
@@ -373,42 +338,40 @@ def _candidate_files(
     # would silently rule out every file that truly holds the key —
     # bounds alone tolerated the mismatch via numeric coercion, blooms
     # must not reintroduce it
-    key_type = StructType.fromJson(json.loads(m["schema"]))[key].dataType
-    k = keys.select(
-        F.col(keys.columns[0]).cast(key_type).alias(key)
-    ).distinct()
-    have_bloom = any(e.get("bloom") for e in entries)
-    if have_bloom:
-        stats = spark.createDataFrame(
-            [
-                (e["file"], e["lo"], e["hi"], _bloom_words(e), e.get("bloom_m"))
-                for e in entries
-            ],
-            ["file", "lo", "hi", "_bm", "_m"],
+    key_type = _key_type(m)
+    k = keys.select(F.col(keys.columns[0]).cast(key_type).alias(key))
+    # the stats relation is typed from the manifest (lo/hi as the key
+    # type), never inferred from the Python values — an all-NULL bounds
+    # column has no type to infer — and built from Arrow, so it plans as a
+    # JVM local relation instead of a Python-worker parallelize
+    bounds_type = to_arrow_type(key_type)
+    stats = spark.createDataFrame(
+        pa.table(
+            {
+                "file": pa.array([e["file"] for e in entries], pa.string()),
+                "lo": pa.array([e["lo"] for e in entries], bounds_type),
+                "hi": pa.array([e["hi"] for e in entries], bounds_type),
+                "_bm": pa.array(
+                    [_bloom_words(e) for e in entries], pa.list_(pa.int64())
+                ),
+                "_m": pa.array([e.get("bloom_m") for e in entries], pa.int64()),
+            }
         )
-    else:
-        stats = spark.createDataFrame(
-            [(e["file"], e["lo"], e["hi"]) for e in entries],
-            ["file", "lo", "hi"],
+    )
+    # probe positions come from the SAME SQL fragment builder as the build
+    # side (_bloom_position_sql) — the two must never drift
+    maybe = F.lit(True)
+    for i in range(_BLOOM_K):
+        pos = _bloom_position_sql(f"`{key}`", i, "_m")
+        maybe = maybe & F.expr(
+            f"(shiftright(element_at(_bm, CAST({pos} DIV 64 AS INT) + 1), "
+            f"CAST({pos} % 64 AS INT)) & 1) = 1"
         )
-    cond = (F.col(key) >= F.col("lo")) & (F.col(key) <= F.col("hi"))
-    if have_bloom:
-        # probe positions come from the SAME SQL fragment builder as the
-        # build side (_bloom_position_sql) — the two must never drift
-        bit_checks = [
-            F.expr(
-                f"(shiftright(element_at(_bm, CAST({pos} DIV 64 AS INT) + 1), "
-                f"CAST({pos} % 64 AS INT)) & 1) = 1"
-            )
-            for pos in (
-                _bloom_position_sql(f"`{key}`", i, "_m")
-                for i in range(_BLOOM_K)
-            )
-        ]
-        maybe = bit_checks[0]
-        for c in bit_checks[1:]:
-            maybe = maybe & c
-        cond = cond & (F.col("_bm").isNull() | maybe)
+    cond = (
+        (F.col(key) >= F.col("lo"))
+        & (F.col(key) <= F.col("hi"))
+        & (F.col("_bm").isNull() | maybe)
+    )
     # stream the (arbitrarily large) key set against the BROADCAST stats
     # relation; distinct collapses to <= |files| rows map-side before the
     # driver ever sees anything
@@ -419,6 +382,28 @@ def _candidate_files(
         .distinct()
         .collect()
     ]
+
+
+def _affected_files(
+    spark: SparkSession, base: str, m: dict, cand: list[str], keys: DataFrame
+) -> set[str]:
+    """The EXACT subset of the candidate files holding a key of ``keys``:
+    a scan of the candidates' key column alone (present in every
+    generation — the key can never be dropped), typed from the manifest so
+    no inference job runs; the collect is bounded by the file count, never
+    by rows."""
+    if not cand:
+        return set()
+    key = m["key_col"]
+    scan = (
+        spark.read.schema(StructType().add(key, _key_type(m)))
+        .parquet(*(os.path.join(base, "files", f) for f in cand))
+        .select(F.col(key), F.col("_metadata.file_name").alias("_f"))
+    )
+    return {
+        r["_f"]
+        for r in scan.join(keys, key, "left_semi").select("_f").distinct().collect()
+    }
 
 
 def _carry(m: dict, files: list[dict], epochs: list[str] | None = None) -> dict:
@@ -439,78 +424,116 @@ def _carry(m: dict, files: list[dict], epochs: list[str] | None = None) -> dict:
     return out
 
 
+def _fold(pick, a, b):
+    """``pick`` (min or max) of two envelope values under Spark's
+    ordering: NULL is ignored and NaN sorts above every number."""
+    if a is None or b is None:
+        return b if a is None else a
+    return pick(a, b, key=lambda x: (x != x, x))
+
+
 def _ingest_parts(
-    spark: SparkSession,
+    df: DataFrame,
     base: str,
-    staging: str,
     key_col: str,
     schema_id: int = 1,
     stats_cols: list[str] | None = None,
 ) -> list[dict]:
-    """Move a staged parquet write's parts into ``files/`` under fresh
-    content-addressed names and return their manifest entries. Stats come
-    from ONE re-read of the staged parts grouped by file (column-pruned to
-    the key + declared stats columns — bounded metadata out, |files| rows);
-    at real scale the same numbers come free from write-time observed
-    metrics, the re-read keeps this implementation honest and simple.
+    """Write ``df`` as staged parquet parts, move them into ``files/``
+    under fresh content-addressed names and return their manifest entries.
+
+    The per-file metadata comes from ONE aggregation over the staged part
+    files, read with ``df``'s own schema pruned to the key and the
+    declared stats columns (no schema-inference job): grouped by (file,
+    bloom word), it bit_ors the key's bloom bits and takes min/max of the
+    key and of each stats column, and the driver folds the per-word
+    envelopes into per-file ones — |files| x (set words) of metadata
+    out, never rows. Row counts are the parquet footers' exact counts,
+    which also size the bloom; a zero-row part (an empty partition still
+    writes one) is dropped. A non-empty part the pass has no metadata for
+    fails the commit rather than being manifested with a guess.
     ``stats_cols`` adds per-file [min, max] envelopes for NON-key columns
     to each entry (Iceberg-style column stats — the data-skipping input
     for predicates the key bounds can't serve)."""
-    parts = [
-        f
-        for f in os.listdir(staging)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    ]
-    if not parts:
-        return []
-    extra = []
-    for c in stats_cols or []:
-        extra.append(F.min(c).alias(f"_lo_{c}"))
-        extra.append(F.max(c).alias(f"_hi_{c}"))
-    stats = {
-        os.path.basename(
-            r["file"].removeprefix("file://").removeprefix("file:")
-        ): r
-        for r in spark.read.parquet(staging)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.min(key_col).alias("lo"),
-            F.max(key_col).alias("hi"),
-            *extra,
-        )
-        .collect()
-    }
-    m_bits, blooms = _bloom_build(
-        spark, staging, key_col, {p: stats[p]["rows"] for p in parts if p in stats}
-    )
-    files_dir = os.path.join(base, "files")
-    os.makedirs(files_dir, exist_ok=True)
-    entries = []
-    for p in parts:
-        if p not in stats:
-            # a zero-row partition still writes a part file; an empty part
-            # has no stats group — drop it rather than manifest it
-            os.remove(os.path.join(staging, p))
-            continue
-        final = f"part-{uuid.uuid4().hex}.parquet"
-        os.rename(os.path.join(staging, p), os.path.join(files_dir, final))
-        s = stats[p]
-        entry = {
-            "file": final,
-            "rows": s["rows"],
-            "lo": s["lo"],
-            "hi": s["hi"],
-            "bloom": blooms.get(p),
-            "bloom_m": m_bits if p in blooms else None,
-            "schema_id": schema_id,
+    import pyarrow.parquet as pq
+
+    cols = [key_col, *(stats_cols or [])]
+    staging = os.path.join(base, f"_staging_{uuid.uuid4().hex}")
+    try:
+        df.write.parquet(staging)
+        rows = {
+            p: pq.read_metadata(os.path.join(staging, p)).num_rows
+            for p in sorted(os.listdir(staging))
+            if p.endswith(".parquet") and not p.startswith((".", "_"))
         }
-        if stats_cols:
-            entry["stats"] = {
-                c: [s[f"_lo_{c}"], s[f"_hi_{c}"]] for c in stats_cols
+        parts = [p for p, n in rows.items() if n]
+        if not parts:
+            return []
+        m_bits = _bloom_size(max(rows.values()))
+        positions = [
+            F.expr(_bloom_position_sql(f"`{key_col}`", i, str(m_bits)))
+            for i in range(_BLOOM_K)
+        ]
+        words = (
+            df.sparkSession.read.schema(StructType([df.schema[c] for c in cols]))
+            .parquet(*(os.path.join(staging, p) for p in parts))
+            .select(
+                F.col("_metadata.file_name").alias("_f"),
+                F.explode(F.array(*positions)).alias("_p"),
+                *(F.col(c).alias(f"_c{i}") for i, c in enumerate(cols)),
+            )
+            .groupBy("_f", (F.col("_p") / 64).cast("long").alias("_w"))
+            .agg(
+                F.expr(
+                    "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(_p % 64 AS INT)))"
+                ).alias("_bits"),
+                *(F.min(f"_c{i}").alias(f"_lo{i}") for i in range(len(cols))),
+                *(F.max(f"_c{i}").alias(f"_hi{i}") for i in range(len(cols))),
+            )
+            .collect()
+        )
+        meta = {
+            p: (bytearray(m_bits // 8), [None] * len(cols), [None] * len(cols))
+            for p in parts
+        }
+        seen = set()
+        for r in words:
+            bloom, lo, hi = meta[r["_f"]]
+            seen.add(r["_f"])
+            w = r["_bits"] & ((1 << 64) - 1)  # signed long -> raw bits
+            bloom[8 * r["_w"] : 8 * r["_w"] + 8] = w.to_bytes(8, "little")
+            for i in range(len(cols)):
+                lo[i] = _fold(min, lo[i], r[f"_lo{i}"])
+                hi[i] = _fold(max, hi[i], r[f"_hi{i}"])
+        if seen != set(parts):
+            raise RuntimeError(
+                f"metadata pass saw no rows of {sorted(set(parts) - seen)} "
+                "although their footers count rows; refusing to commit"
+            )
+        files_dir = os.path.join(base, "files")
+        os.makedirs(files_dir, exist_ok=True)
+        entries = []
+        for p in parts:
+            bloom, lo, hi = meta[p]
+            final = f"part-{uuid.uuid4().hex}.parquet"
+            os.rename(os.path.join(staging, p), os.path.join(files_dir, final))
+            entry = {
+                "file": final,
+                "rows": rows[p],
+                "lo": lo[0],
+                "hi": hi[0],
+                "bloom": bloom.hex(),
+                "bloom_m": m_bits,
+                "schema_id": schema_id,
             }
-        entries.append(entry)
-    return entries
+            if stats_cols:
+                entry["stats"] = {
+                    c: [lo[i], hi[i]] for i, c in enumerate(cols) if i
+                }
+            entries.append(entry)
+        return entries
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def publish_snapshot(
@@ -530,7 +553,6 @@ def publish_snapshot(
     manifest entry (here and on every later rewrite): the data-skipping
     input for ``scan_pruned`` predicates the key bounds can't serve."""
     os.makedirs(base, exist_ok=True)
-    staging = os.path.join(base, f"_staging_{uuid.uuid4().hex}")
     if n_files:
         ckey = cluster_expr if cluster_expr is not None else F.col(key_col)
         out = (
@@ -541,13 +563,7 @@ def publish_snapshot(
         )
     else:
         out = df
-    out.write.parquet(staging)
-    try:
-        entries = _ingest_parts(
-            df.sparkSession, base, staging, key_col, 1, stats_cols
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    entries = _ingest_parts(out, base, key_col, 1, stats_cols)
     vs = _versions(base)
     v = (vs[-1] + 1) if vs else 1
     manifest = {
@@ -666,7 +682,7 @@ def erase_rows(
         raise ValueError(
             f"tombstone column {key!r} != table key {m['key_col']!r}"
         )
-    tomb = tombstones.select(F.col(tombstones.columns[0]).alias(key)).distinct()
+    tomb = tombstones.select(F.col(tombstones.columns[0]).alias(key))
 
     # 1. prune candidates from the manifest's bounded stats: per-file key
     # bounds AND per-file blooms, one broadcast join over |files| rows
@@ -674,36 +690,20 @@ def erase_rows(
     if not cand:
         return _versions(base)[-1]
 
-    # 2. exact affected files: scan candidates ONLY (key column alone —
-    # present in every generation since the key can never be dropped);
-    # collect is bounded by the file count, never by rows
-    files_dir = os.path.join(base, "files")
-    cand_paths = [os.path.join(files_dir, f) for f in cand]
-    scan = spark.read.parquet(*cand_paths).select(
-        F.col(key), F.input_file_name().alias("_f")
-    )
-    affected = {
-        os.path.basename(r["_f"].removeprefix("file://").removeprefix("file:"))
-        for r in scan.join(tomb, key, "left_semi").select("_f").distinct().collect()
-    }
+    # 2. exact affected files: scan candidates ONLY
+    affected = _affected_files(spark, base, m, cand, tomb)
     if not affected:
         return _versions(base)[-1]
 
     # 3. rewrite survivors of the affected files in one distributed pass
     # (reconciled to the current column spec — a COW rewrite of a pre-add
     # file materializes the evolved schema, like Delta's rewrite path)
-    staging = os.path.join(base, f"_staging_{uuid.uuid4().hex}")
     survivors = _read_entries(
         spark, base, m, [e for e in m["files"] if e["file"] in affected]
     ).join(tomb, key, "left_anti")
-    survivors.write.parquet(staging)
-    try:
-        new_entries = _ingest_parts(
-            spark, base, staging, key, m.get("schema_id", 1),
-            m.get("stats_cols"),
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    new_entries = _ingest_parts(
+        survivors, base, key, m.get("schema_id", 1), m.get("stats_cols")
+    )
 
     # 4. the commit: untouched entries verbatim + replacements; the
     # manifest replace is the single visibility flip (the epoch registry
@@ -725,20 +725,14 @@ def append_rows(df: DataFrame, base: str, epoch: str | None = None) -> int:
     m = read_manifest(base)
     if epoch is not None and epoch in m.get("epochs", []):
         return _versions(base)[-1]
-    staging = os.path.join(base, f"_staging_{uuid.uuid4().hex}")
     cols = _columns_of(m)
     if cols is not None:
         df = df.select(
             *[F.col(c["name"]).cast(c["type"]).alias(c["name"]) for c in cols]
         )
-    df.write.parquet(staging)
-    try:
-        new_entries = _ingest_parts(
-            df.sparkSession, base, staging, m["key_col"],
-            m.get("schema_id", 1), m.get("stats_cols"),
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    new_entries = _ingest_parts(
+        df, base, m["key_col"], m.get("schema_id", 1), m.get("stats_cols")
+    )
     entries = m["files"] + new_entries
     v = _versions(base)[-1] + 1
     _commit_manifest(
@@ -800,28 +794,15 @@ def merge_rows(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-    src_keys = source.select(key).distinct()
+    src_keys = source.select(key)
 
-    affected: set[str] = set()
-    files_dir = os.path.join(base, "files")
-    cand = _candidate_files(spark, m, src_keys, key)
-    if cand:
-        scan = spark.read.parquet(
-            *(os.path.join(files_dir, f) for f in cand)
-        ).select(F.col(key), F.input_file_name().alias("_f"))
-        affected = {
-            os.path.basename(
-                r["_f"].removeprefix("file://").removeprefix("file:")
-            )
-            for r in scan.join(src_keys, key, "left_semi")
-            .select("_f")
-            .distinct()
-            .collect()
-        }
+    affected = _affected_files(
+        spark, base, m, _candidate_files(spark, m, src_keys, key), src_keys
+    )
 
-    cols = [f.name for f in StructType.fromJson(json.loads(m["schema"])).fields]
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    cols = schema.fieldNames()
     affected_entries = [e for e in m["files"] if e["file"] in affected]
-    staging = os.path.join(base, f"_staging_{uuid.uuid4().hex}")
     if affected and order_cols:
         # winner set per KEY, not per table row: the table may legally
         # hold several rows for a key (append never dedupes), and a
@@ -851,14 +832,13 @@ def merge_rows(
         out = survivors.unionByName(source.select(*survivors.columns))
     else:
         out = source.select(*cols)
-    out.write.parquet(staging)
-    try:
-        new_entries = _ingest_parts(
-            spark, base, staging, key, m.get("schema_id", 1),
-            m.get("stats_cols"),
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    # written in the table's own types, like append_rows: readers type the
+    # files from the manifest, and the key's bloom must hash the type the
+    # probe casts to
+    out = out.select(*(F.col(f.name).cast(f.dataType) for f in schema.fields))
+    new_entries = _ingest_parts(
+        out, base, key, m.get("schema_id", 1), m.get("stats_cols")
+    )
 
     entries = [e for e in m["files"] if e["file"] not in affected] + new_entries
     v = _versions(base)[-1] + 1
@@ -897,16 +877,15 @@ def compact_snapshot(
     n_files = max(1, -(-total // target_file_bytes))
     if n_files >= len(m["files"]):
         return _versions(base)[-1]
-    df = read_snapshot(spark, base)
-    staging = os.path.join(base, f"_staging_{uuid.uuid4().hex}")
-    df.repartitionByRange(n_files, F.col(m["key_col"])).write.parquet(staging)
-    try:
-        entries = _ingest_parts(
-            spark, base, staging, m["key_col"], m.get("schema_id", 1),
-            m.get("stats_cols"),
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    entries = _ingest_parts(
+        read_snapshot(spark, base).repartitionByRange(
+            n_files, F.col(m["key_col"])
+        ),
+        base,
+        m["key_col"],
+        m.get("schema_id", 1),
+        m.get("stats_cols"),
+    )
     v = _versions(base)[-1] + 1
     _commit_manifest(base, v, _carry(m, entries), op="compact")
     return v

@@ -58,6 +58,7 @@ from pyspark.sql.datasource import (
 )
 
 from .manifest_table import (
+    _bloom_size,
     _columns_of,
     _spec_from_schema,
     _versions,
@@ -252,11 +253,13 @@ def _arrow_type(spark_type: str):
 #   1. Each write TASK streams its Arrow batches into one parquet part under
 #      a staging dir and returns a commit message carrying the entry
 #      metadata — rows, key [lo, hi], declared-column stats, and the per-file
-#      bloom bitmap, all computed AT WRITE TIME from the bytes in hand (the
-#      production shape _ingest_parts' re-read stands in for; the bitmap uses
-#      the same pmod(xxhash64(key, i), m) probes via the spec-pinned
-#      pure-Python XXH64, oracles/hashes.py, so probe-side candidate_files
-#      reads it unchanged).
+#      bloom bitmap, all computed AT WRITE TIME from the bytes in hand. (The
+#      library write paths go through Spark's parquet sink, which returns
+#      no per-file metadata, so _ingest_parts derives the same entries in
+#      one aggregation over the staged parts.) The bitmap uses the same
+#      pmod(xxhash64(key, i), m) probes via the spec-pinned pure-Python
+#      XXH64, oracles/hashes.py, so probe-side candidate_files reads it
+#      unchanged.
 #   2. ``commit`` (driver) moves parts to content-addressed names under
 #      files/ and CAS-commits the next manifest version — append unions with
 #      the current file list, overwrite replaces it; an ``epoch`` option makes
@@ -287,10 +290,11 @@ def _json_safe(v):
     return v if isinstance(v, (int, float, str, type(None))) else None
 
 
-def _bloom_bitmap(keys, key_type: str) -> tuple[str | None, int | None]:
-    """Per-file bloom over the key column, bit-identical to the SQL build
-    (manifest_table._bloom_build): position i = pmod(xxhash64(key, i), m),
-    words packed little-endian. Python's ``%`` IS pmod for positive m."""
+def _bloom_bitmap(keys, key_type: str, m: int) -> tuple[str | None, int | None]:
+    """Per-file m-bit bloom over the key column, bit-identical to the SQL
+    build (manifest_table._ingest_parts): position i = pmod(xxhash64(key,
+    i), m), words packed little-endian. Python's ``%`` IS pmod for
+    positive m."""
     from ..oracles.hashes import xxhash64_int, xxhash64_long, xxhash64_str
 
     hasher = {
@@ -302,9 +306,8 @@ def _bloom_bitmap(keys, key_type: str) -> tuple[str | None, int | None]:
     }.get(key_type)
     if hasher is None:
         return None, None  # no bloom -> file always MIGHT match (back-compat)
-    from .manifest_table import _BLOOM_K, _BLOOM_MAX_BITS, _BLOOM_MIN_BITS, _next_pow2
+    from .manifest_table import _BLOOM_K
 
-    m = min(_BLOOM_MAX_BITS, max(_BLOOM_MIN_BITS, _next_pow2(10 * len(keys))))
     buf = bytearray(m // 8)
     for k in keys:
         # a NULL child leaves the running seed unchanged in Spark's hash
@@ -374,7 +377,9 @@ class _ManifestWriter(DataSourceArrowWriter):
             ]
             for c in self._stats_cols
         } or None
-        bloom, bloom_m = _bloom_bitmap(key_arr.to_pylist(), self._key_type)
+        bloom, bloom_m = _bloom_bitmap(
+            key_arr.to_pylist(), self._key_type, _bloom_size(len(key_arr))
+        )
         return _WriteMessage(
             name,
             t.num_rows,

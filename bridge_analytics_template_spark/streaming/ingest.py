@@ -464,7 +464,8 @@ def stream_append_table(
     if not os.path.exists(os.path.join(run_dir, "ckpt")):
         shutil.rmtree(run_dir, ignore_errors=True)
         _split_shards(src, run_dir, n_shards, id_col or key_col)
-    schema = spark.read.parquet(os.path.join(run_dir, "in")).schema
+    # the shards are src's own rows: its schema needs no inference job
+    schema = src.schema
     if not _versions(base):
         publish_snapshot(
             spark.createDataFrame([], schema), base, key_col
@@ -514,7 +515,8 @@ def stream_upsert_table(
     if not os.path.exists(os.path.join(run_dir, "ckpt")):
         shutil.rmtree(run_dir, ignore_errors=True)
         _split_shards(src, run_dir, n_shards, id_col or key_col)
-    schema = spark.read.parquet(os.path.join(run_dir, "in")).schema
+    # the shards are src's own rows: its schema needs no inference job
+    schema = src.schema
     if not _versions(base):
         publish_snapshot(spark.createDataFrame([], schema), base, key_col)
 

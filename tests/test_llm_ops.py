@@ -168,6 +168,17 @@ def test_connected_components_labels_min_id(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_small_path_rejects_null_ids(spark):
+    """A NULL node id reaches the driver union-find as a float NaN (Arrow
+    turns a nullable bigint column into float64); it must raise, not be
+    wrapped into a bogus integer label."""
+    from bridge_analytics_template_spark.llm.dedup import connected_components
+
+    edges = spark.createDataFrame([(1, 2), (3, None)], "doc_a long, doc_b long")
+    with pytest.raises(TypeError, match="node ids"):
+        connected_components(edges)
+
+
 def test_quality_score_keep_verdict(spark):
     from bridge_analytics_template_spark.queries.registry import QUERIES
     import tempfile, os

@@ -5,6 +5,7 @@ crash-atomic commits, vacuum retention."""
 from __future__ import annotations
 
 import json
+import math
 import os
 
 import pytest
@@ -1094,3 +1095,233 @@ def test_evolve_preserves_stats_cols(spark, tmp_path):
     # dropping a stats column removes just that envelope declaration
     evolve_schema(base, drop=["w"])
     assert read_manifest(base)["stats_cols"] == ["v"]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_job_counts_pinned(spark, tmp_path):
+    """Each commit kind runs a fixed number of Spark jobs: the staged
+    write, ONE stats+bloom aggregation over the staged parts (two jobs
+    under AQE: shuffle map + result) and, for erase/merge, the candidate
+    probe and the affected-file scan — no schema-inference job anywhere.
+    The counts repeat exactly, so a change that brings back a re-read or
+    an inference job fails here."""
+    from bridge_analytics_template_spark.sources.manifest_table import (
+        append_rows,
+        merge_rows,
+    )
+
+    df = spark.range(0, 2000).selectExpr(
+        "id AS k", "id * 2 AS v", "CAST(id % 7 AS STRING) AS w"
+    )
+    tomb = spark.range(100, 110).selectExpr("id AS k")
+    src = spark.range(1990, 2010).selectExpr("id AS k", "id * 3 AS v", "'m' AS w")
+    add = spark.range(3000, 3050).selectExpr("id AS k", "id * 2 AS v", "'a' AS w")
+    for rep in range(2):
+        base = str(tmp_path / f"t{rep}")
+        counts = {
+            "publish": _jobs(
+                spark, lambda: publish_snapshot(df, base, "k", n_files=4)
+            ),
+            "erase": _jobs(spark, lambda: erase_rows(spark, base, tomb)),
+            "merge": _jobs(spark, lambda: merge_rows(spark, base, src)),
+            "append": _jobs(spark, lambda: append_rows(add, base)),
+        }
+        assert counts == {"publish": 5, "erase": 10, "merge": 10, "append": 3}
+        assert read_manifest(base)["rows"] == 2000 - 10 + 10 + 50
+
+
+def _reference_stats(spark, base: str, m: dict) -> dict:
+    """Per-file (rows, [(lo, hi) of the key and each stats column]) the way
+    entries were computed before the fused pass: a count/min/max
+    aggregation grouped by input file over the final files."""
+    cols = [m["key_col"], *m.get("stats_cols", [])]
+    files = [os.path.join(base, "files", e["file"]) for e in m["files"]]
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for i, c in enumerate(cols):
+        aggs += [F.min(c).alias(f"lo{i}"), F.max(c).alias(f"hi{i}")]
+    return {
+        os.path.basename(r["f"]): (
+            r["rows"],
+            [(r[f"lo{i}"], r[f"hi{i}"]) for i in range(len(cols))],
+        )
+        for r in spark.read.parquet(*files)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(*aggs)
+        .collect()
+    }
+
+
+def _nan_safe(v):
+    return "NaN" if isinstance(v, float) and v != v else v
+
+
+def _assert_entries_match_reference(spark, base: str) -> dict:
+    """Every entry of the current snapshot equals the per-file reference,
+    and its bloom is bit-identical to the connector's pure-Python bitmap
+    over the file's keys at the entry's m."""
+    import pyarrow.parquet as pq
+
+    from bridge_analytics_template_spark.sources.manifest_table import (
+        _bloom_size,
+    )
+    from bridge_analytics_template_spark.sources.table_connector import (
+        _bloom_bitmap,
+    )
+
+    m = read_manifest(base)
+    key = m["key_col"]
+    key_type = next(c["type"] for c in m["columns"] if c["name"] == key)
+    ref = _reference_stats(spark, base, m) if m["files"] else {}
+    assert set(ref) == {e["file"] for e in m["files"]}
+    for e in m["files"]:
+        got = [(e["lo"], e["hi"])] + [
+            tuple(e["stats"][c]) for c in m.get("stats_cols", [])
+        ]
+        rows, want = ref[e["file"]]
+        assert e["rows"] == rows > 0
+        assert [tuple(map(_nan_safe, p)) for p in got] == [
+            tuple(map(_nan_safe, p)) for p in want
+        ], e["file"]
+        keys = (
+            pq.read_table(os.path.join(base, "files", e["file"]), columns=[key])
+            .column(key)
+            .to_pylist()
+        )
+        assert (e["bloom"], e["bloom_m"]) == _bloom_bitmap(
+            keys, key_type, e["bloom_m"]
+        )
+        # m is sized by the commit's largest part
+        assert e["bloom_m"] >= _bloom_size(e["rows"])
+    return m
+
+
+def test_fused_metadata_pass_matches_per_file_reference(spark, tmp_path):
+    """The one-pass entry metadata (footer row counts; per-(file, word)
+    bit_or + min/max folded on the driver) equals the per-file
+    count/min/max it replaced, on the layouts where a fold could go wrong:
+    a part split across several scan tasks, zero-row parts, a string key,
+    declared stats columns (with a NaN) and NULL keys — including a file
+    whose keys are ALL NULL."""
+    import pyarrow.parquet as pq
+
+    from bridge_analytics_template_spark.sources.manifest_table import (
+        _bloom_size,
+        append_rows,
+    )
+
+    # 1. one part in many row groups, read back by several tasks
+    split = str(tmp_path / "split")
+    df = spark.range(0, 20000).selectExpr(
+        "CASE WHEN id % 5 = 0 THEN NULL ELSE id END AS k",
+        "CASE WHEN id = 7 THEN double('NaN') ELSE id * 1.5 END AS v",
+        "CAST(id % 13 AS STRING) AS w",
+    )
+    conf = {
+        "parquet.block.size": "16384",
+        "spark.sql.files.maxPartitionBytes": "32k",
+        "spark.sql.files.openCostInBytes": "0",
+    }
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        publish_snapshot(df.coalesce(1), split, "k", stats_cols=["v", "w"])
+        (e,) = read_manifest(split)["files"]
+        path = os.path.join(split, "files", e["file"])
+        assert pq.read_metadata(path).num_row_groups > 1
+        assert spark.read.parquet(path).rdd.getNumPartitions() > 1
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    m = _assert_entries_match_reference(spark, split)
+    assert math.isnan(m["files"][0]["stats"]["v"][1])  # NaN sorts highest
+
+    # 2. zero-row parts: a 2-row frame over 8 partitions writes an empty
+    # part next to the full ones; an all-empty append writes only that
+    tiny = str(tmp_path / "tiny")
+    publish_snapshot(
+        spark.range(2).selectExpr("id AS k", "id AS v").repartition(8), tiny, "k"
+    )
+    assert len(_assert_entries_match_reference(spark, tiny)["files"]) == 2
+    append_rows(spark.range(0).selectExpr("id AS k", "id AS v"), tiny)
+    assert len(_assert_entries_match_reference(spark, tiny)["files"]) == 2
+
+    # 3. string key, range-clustered over several files
+    strkey = str(tmp_path / "str")
+    publish_snapshot(
+        spark.range(0, 3000).selectExpr("CONCAT('k', id) AS s", "id AS v"),
+        strkey,
+        "s",
+        n_files=3,
+    )
+    m = _assert_entries_match_reference(spark, strkey)
+    assert len(m["files"]) == 3
+    assert {e["bloom_m"] for e in m["files"]} == {
+        _bloom_size(max(e["rows"] for e in m["files"]))
+    }
+
+    # 4. NULL keys: one file of nothing but NULL keys, one mixed
+    nulls = str(tmp_path / "nulls")
+    publish_snapshot(
+        spark.range(0, 100)
+        .selectExpr("CAST(NULL AS BIGINT) AS k", "id AS g")
+        .coalesce(1),
+        nulls,
+        "k",
+        stats_cols=["g"],
+    )
+    append_rows(
+        spark.range(100, 400)
+        .selectExpr("CASE WHEN id % 3 = 0 THEN NULL ELSE id END AS k", "id AS g")
+        .coalesce(1),
+        nulls,
+    )
+    m = _assert_entries_match_reference(spark, nulls)
+    assert sorted((e["lo"] is None, e["rows"]) for e in m["files"]) == [
+        (False, 300),
+        (True, 100),
+    ]
+
+
+def test_all_null_keys_erase_merge_lookup(spark, tmp_path):
+    """A nullable key that is NULL in every row leaves every entry with
+    lo = hi = NULL. The candidate probe types its stats relation from the
+    manifest's key type, so erase / merge / lookup still plan (they used
+    to fail inferring a type from all-None bounds) and lose no row."""
+    from bridge_analytics_template_spark.sources.manifest_table import (
+        lookup_rows,
+        merge_rows,
+    )
+
+    base = str(tmp_path / "t")
+    publish_snapshot(
+        spark.createDataFrame([(None, "a"), (None, "b")], "k long, v string"),
+        base,
+        "k",
+    )
+    assert all(e["lo"] is None and e["hi"] is None for e in read_manifest(base)["files"])
+    one = spark.createDataFrame([(1,)], "k long")
+    assert erase_rows(spark, base, one) == 1  # nothing matched: no new version
+    assert lookup_rows(spark, base, one).count() == 0
+    merge_rows(spark, base, spark.createDataFrame([(1, "x")], "k long, v string"))
+    got = sorted(
+        (r["k"] is None, r["k"] or 0, r["v"]) for r in read_snapshot(spark, base).collect()
+    )
+    assert got == [(False, 1, "x"), (True, 0, "a"), (True, 0, "b")]
