@@ -395,11 +395,11 @@ def _auto_block_size(n: int) -> int:
 
 def _pack_blocks(vectors, id_col, vec_col, block_size, blk_name, rows_name, n_rows=None):
     """Contiguous block ids in id order (operators/rowids.py — range
-    partition, no global window), each block packed into ONE row
-    (collect_list of (id, vec): B·d doubles ≈ block_size·dim·8 bytes).
-    Shared packing stage of the blocked-GEMM joins below. ``n_rows``: the
-    callers below always just counted the input for block sizing — passing
-    it through skips the id-assign's internal sizing job (r10)."""
+    buckets, one Python task per bucket, no global window), each block
+    packed into ONE row (collect_list of (id, vec): B·d doubles ≈
+    block_size·dim·8 bytes). Shared packing stage of the blocked-GEMM joins
+    below. ``n_rows``: the callers' row estimate, passed through so the
+    id-assign skips its own sizing."""
     from ..operators.rowids import assign_contiguous_ids
 
     v = vectors.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))

@@ -5,8 +5,9 @@ single-partition window.
 funnels the whole dataset through ONE task — same cliff as global
 ``row_number`` (operators/rowids.py). The distributed recipe is identical:
 bucket rows by explicit range boundaries, sum values per bucket, prefix-sum
-those totals into per-bucket offsets (driver-side over num_partitions
-numbers), then one mapInPandas pass adds offset + local running sum.
+those totals into per-bucket offsets (driver-side over one number per
+bucket), then one mapInPandas pass over the bucket-routed rows
+(``rowids.route_by_bucket``) adds offset + local running sum.
 
 DETERMINISM (ADVICE r2, same hazard as rowids): boundaries come from
 ``deterministic_bounds`` — a pure function of the data — and routing is a
@@ -25,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rowids import bucket_expression, deterministic_bounds
+from .rowids import bucket_expression, deterministic_bounds, route_by_bucket
 
 
 def partitioned_cumsum(
@@ -41,12 +42,15 @@ def partitioned_cumsum(
     grand total as a constant column (it falls out of the offset pass for
     free — no extra job, no unpartitioned window).
 
+    ``num_partitions``: the cap on how many buckets the boundary sample may
+    draw; the routed pass shuffles into one partition per bucket.
+
     Sizing (r11): ``n`` only feeds the boundary-sample rate and the
     one-bucket cutover — never the values (the cumsum is a pure function
     of the global order) — so the exact ``count()`` job is replaced by the
-    parquet-footer row count of the plan's leaves (an UPPER bound for any
-    non-expanding plan; estimated_scan_rows), falling back to ``count()``
-    when leaves aren't stat-able. Callers whose plan EXPANDS rows far past
+    parquet-footer row count of the plan's leaves (estimated_scan_rows; a
+    local-relation leaf it cannot see, even an estimate of 0, costs balance,
+    never values), falling back to ``count()`` when leaves aren't stat-able. Callers whose plan EXPANDS rows far past
     its scan (a large explode) should not rely on the one-bucket cutover —
     every current caller is a filter/aggregate/join at or below scan
     cardinality (events_peak_concurrency's 2x interval union is the worst
@@ -59,11 +63,6 @@ def partitioned_cumsum(
     n = estimated_scan_rows(df)
     if n is None:
         n = df.count()
-        if n == 0:
-            out = df.withColumn(cum_name, F.col(value_col))
-            if total_name is not None:
-                out = out.withColumn(total_name, F.col(value_col))
-            return out.where(F.lit(False))
 
     bounds = deterministic_bounds(df, order_cols, num_partitions, n)
     bucket_expr = bucket_expression(df, order_cols, bounds)
@@ -82,13 +81,6 @@ def partitioned_cumsum(
             .agg(F.sum(value_col).alias("s"))
             .collect()
         )
-        if not sums:
-            # actually-empty input discovered by the sums job (the footer
-            # estimate is pre-filter): same empty frame as the n == 0 path
-            out = df.withColumn(cum_name, F.col(value_col))
-            if total_name is not None:
-                out = out.withColumn(total_name, F.col(value_col))
-            return out.where(F.lit(False))
         by_bkt = {r["_bkt"]: r["s"] for r in sums}
         offsets, acc = {}, 0
         for bkt in sorted(by_bkt):
@@ -120,9 +112,6 @@ def partitioned_cumsum(
                 run[int(bkt)] = run.get(int(bkt), 0) + s
             yield res
 
-    routed = (
-        df.withColumn("_bkt", bucket_expr)
-        .repartition(max(1, num_partitions), "_bkt")
-        .sortWithinPartitions("_bkt", *order_cols)
+    return route_by_bucket(df, bucket_expr, bounds, order_cols).mapInPandas(
+        add_cumsum, schema=out_schema
     )
-    return routed.mapInPandas(add_cumsum, schema=out_schema)

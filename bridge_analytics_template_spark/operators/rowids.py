@@ -3,9 +3,10 @@
 ``row_number()`` over an unpartitioned window funnels the whole dataset
 through ONE task — the canonical scale cliff. The distributed recipe:
 bucket rows by explicit range boundaries, count rows per bucket, prefix-sum
-the counts into per-bucket offsets (a driver-side op over num_partitions
-integers), then add offset + local index in a single mapInPandas pass over
-bucket-partitioned, bucket-sorted data.
+the counts into per-bucket offsets (a driver-side op over one integer per
+bucket), then add offset + local index in a single mapInPandas pass over
+bucket-partitioned, bucket-sorted data (:func:`route_by_bucket`: one shuffle
+partition per bucket, so a one-bucket input runs ONE Python task).
 
 DETERMINISM (ADVICE r2): the boundaries are computed from a hash-sampled
 subset of the keys — a pure function of the data — and bucket routing is a
@@ -18,7 +19,6 @@ cache pinning required for correctness.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -75,6 +75,20 @@ def bucket_expression(df: DataFrame, order_cols: list[str], bounds: list[tuple])
     return sum([(key >= b).cast("int") for b in lit_bounds], F.lit(0)).cast("int")
 
 
+def route_by_bucket(
+    df: DataFrame, bucket_expr: Column, bounds: list[tuple], order_cols: list[str]
+) -> DataFrame:
+    """``df`` plus ``_bkt``, hash-routed into one partition per bucket and
+    key-sorted within each: the input of the per-bucket mapInPandas pass
+    of both operators. No empty Python tasks; buckets that hash to the
+    same partition stay correct (both passes keep per-bucket counters)."""
+    return (
+        df.withColumn("_bkt", bucket_expr)
+        .repartition(len(bounds) + 1, "_bkt")
+        .sortWithinPartitions("_bkt", *order_cols)
+    )
+
+
 def assign_contiguous_ids(
     df: DataFrame,
     order_col: str | list[str],
@@ -89,21 +103,19 @@ def assign_contiguous_ids(
     keys could straddle a bucket boundary, which would make their relative
     ids routing-dependent.
 
-    ``n_rows``: the exact input row count, when the caller already knows it
-    (e.g. just materialized a persisted aggregate with ``count()``) — skips
-    the sizing work. A wrong POSITIVE value only skews the sample rate and
-    bucket balance, never the ids (the routing and local indexing are pure
-    row functions). ``n_rows <= 0`` is treated as UNKNOWN (r11, ADVICE): 0
-    used to short-circuit into the empty-input early return and silently
-    drop every row of a non-empty frame.
+    ``num_partitions``: the cap on the bucket count
+    (:func:`deterministic_bounds`), not a shuffle width — the routed pass
+    has one partition per bucket.
 
-    When unknown, n comes from the parquet-footer row count of the plan's
-    leaves (estimated_scan_rows — no job; an UPPER bound for any
-    non-expanding plan, and n never affects the ids themselves), falling
-    back to one column-pruned ``count()`` job when leaves aren't
-    stat-able. A caller whose plan EXPANDS rows well past its scan (a
-    large explode) should pass ``n_rows`` so the one-bucket cutover isn't
-    taken on an under-estimate.
+    ``n_rows``: the input row count, when the caller already knows it —
+    skips the sizing work; ``n_rows <= 0`` is treated as unknown. When
+    unknown, n comes from the parquet-footer row count of the plan's
+    leaves (estimated_scan_rows — no job), falling back to one
+    column-pruned ``count()`` job when leaves aren't stat-able. n only sets
+    the sample rate, the one-bucket cutover and the bucket balance, never
+    the ids (routing and local indexing are pure row functions), so an
+    under-estimate — an explode, or a union whose local-relation leaf the
+    footers cannot see, down to an estimate of 0 — costs balance, not rows.
     """
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
 
@@ -114,8 +126,6 @@ def assign_contiguous_ids(
 
         est = estimated_scan_rows(df)
         n = est if est is not None else df.count()
-    if n == 0:
-        return df.withColumn(id_name, F.lit(0).cast("long")).where(F.lit(False))
 
     # Job 2: deterministic hash sample of the keys (never df.sample — seeds
     # are execution-dependent; xxhash64 of the key is a pure row function).
@@ -125,7 +135,7 @@ def assign_contiguous_ids(
     bounds = deterministic_bounds(df, order_cols, num_partitions, n)
     bucket_expr = bucket_expression(df, order_cols, bounds)
 
-    # Job 3: per-bucket counts -> offsets (num_partitions ints on the driver).
+    # Job 3: per-bucket counts -> offsets (one int per bucket on the driver).
     if not bounds:
         offsets = {0: 0}
     else:
@@ -164,9 +174,6 @@ def assign_contiguous_ids(
                 local[int(bkt)] = local.get(int(bkt), 0) + int(cnt)
             yield out
 
-    routed = (
-        df.withColumn("_bkt", bucket_expr)
-        .repartition(max(1, num_partitions), "_bkt")
-        .sortWithinPartitions("_bkt", *order_cols)
+    return route_by_bucket(df, bucket_expr, bounds, order_cols).mapInPandas(
+        add_ids, schema=out_schema
     )
-    return routed.mapInPandas(add_ids, schema=out_schema)

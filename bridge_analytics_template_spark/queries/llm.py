@@ -1112,15 +1112,19 @@ def llm_ann_recall_report(spark, sf_dir):
         "ivfpq": lambda: ivfpq_knn(q, e, k=5),
     }
 
-    def run(fn):
+    def run(name):
         # build the pipeline and fetch its |Q|·k id pairs in THIS thread,
         # so the five jobs overlap; Arrow fetch (toPandas) of two int64
         # columns, same as the graph fast-path probe.
-        pdf = fn().select("query_id", "neighbor_id").toPandas()
-        return set(zip(pdf["query_id"].tolist(), pdf["neighbor_id"].tolist()))
+        pdf = builders[name]().select("query_id", "neighbor_id").toPandas()
+        pairs = set(zip(pdf["query_id"].tolist(), pdf["neighbor_id"].tolist()))
+        if len(pairs) != len(pdf):
+            # a repeated pair would collapse in the set and skew the recall
+            raise ValueError(f"{name}: duplicate (query_id, neighbor_id) pairs")
+        return pairs
 
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        futures = {name: pool.submit(run, fn) for name, fn in builders.items()}
+        futures = {name: pool.submit(run, name) for name in builders}
         pairs = {name: f.result() for name, f in futures.items()}
     brute_pairs = pairs["brute"]
     n_brute = len(brute_pairs)

@@ -155,6 +155,114 @@ def test_assign_contiguous_ids_recompute_deterministic(spark, sf_dir):
     assert first == second
 
 
+def test_zero_footer_estimate_union_keeps_rows(spark, tmp_path):
+    """A union of an empty parquet file with a local relation: the footer
+    estimate reads 0 although the frame has 3 rows. Both operators must
+    return every row (an estimate may cost time, never rows)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bridge_analytics_template_spark.operators.prefix import partitioned_cumsum
+    from bridge_analytics_template_spark.operators.rowids import assign_contiguous_ids
+    from bridge_analytics_template_spark.partitioning import estimated_scan_rows
+
+    path = str(tmp_path / "empty.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array([], pa.int64()), "v": pa.array([], pa.int64())}), path
+    )
+    local = spark.createDataFrame([(3, 30), (1, 10), (2, 20)], "k long, v long")
+    u = spark.read.parquet(path).unionByName(local)
+    assert estimated_scan_rows(u) == 0 and u.count() == 3
+    ids = {r["k"]: r["i"] for r in assign_contiguous_ids(u, "k", id_name="i").collect()}
+    assert ids == {1: 0, 2: 1, 3: 2}
+    cum = {r["k"]: r["cum"] for r in partitioned_cumsum(u, ["k"], "v").collect()}
+    assert cum == {1: 10, 2: 30, 3: 60}
+
+    empty = spark.read.parquet(path)
+    assert assign_contiguous_ids(empty, "k").collect() == []
+    out = partitioned_cumsum(empty, ["k"], "v", total_name="t")
+    assert out.columns == ["k", "v", "cum", "t"] and out.collect() == []
+
+
+def test_multi_bucket_path_matches_window(spark, monkeypatch):
+    """The distributed path (sampled bounds, per-bucket offsets, several
+    buckets in the routed pass) — forced by lowering the one-bucket
+    cutover, since every fixture is below it. Ids equal row_number() - 1,
+    cumsum and total equal the window SUMs, and the routed pass has one
+    partition per bucket."""
+    import random
+
+    from pyspark.sql import Window
+
+    from bridge_analytics_template_spark.operators import rowids
+    from bridge_analytics_template_spark.operators.prefix import partitioned_cumsum
+
+    monkeypatch.setattr(rowids, "_ONE_TASK_MAX_ROWS", 0)
+    rng = random.Random(11)
+    rows = [(i, rng.randint(-50, 50)) for i in range(5000)]
+    df = spark.createDataFrame(rows, "k long, v long").withColumn("_negv", -F.col("v"))
+    order = ["_negv", "k"]
+    bounds = rowids.deterministic_bounds(df, order, 8, len(rows))
+    assert len(bounds) == 7
+
+    ids = rowids.assign_contiguous_ids(df, order, id_name="i", num_partitions=8)
+    cum = partitioned_cumsum(
+        df, order, "v", cum_name="cum", total_name="total", num_partitions=8
+    )
+    assert ids.rdd.getNumPartitions() == cum.rdd.getNumPartitions() == len(bounds) + 1
+
+    w = Window.orderBy(F.desc("v"), "k")
+    expect = {
+        r["k"]: (r["i"], r["cum"], r["total"])
+        for r in df.select(
+            "k",
+            (F.row_number().over(w) - 1).alias("i"),
+            F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).alias("cum"),
+            F.sum("v").over(Window.partitionBy()).alias("total"),
+        ).collect()
+    }
+    got_ids = {r["k"]: r["i"] for r in ids.collect()}
+    got = {r["k"]: (got_ids[r["k"]], r["cum"], r["total"]) for r in cum.collect()}
+    assert len(got) == len(rows) and got == expect
+
+
+def _stage_tasks(spark, fn) -> list[int]:
+    """Tasks of every stage ``fn`` runs (skipped stages excluded), in stage
+    order, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    stages = {
+        s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds
+    }
+    infos = [st.getStageInfo(s) for s in sorted(stages)]
+    return [i.numTasks for i in infos if i.numCompletedTasks > 0]
+
+
+def test_one_bucket_routed_pass_runs_one_task(spark):
+    """Below the cutover there is one bucket, so each operator's routed
+    mapInPandas pass runs ONE Python task after the 4-task input stage —
+    not one busy task plus empty ones of a fixed-width shuffle. The counts
+    repeat exactly."""
+    from bridge_analytics_template_spark.operators.prefix import partitioned_cumsum
+    from bridge_analytics_template_spark.operators.rowids import assign_contiguous_ids
+
+    df = spark.range(0, 200, 1, 4).selectExpr("id AS k", "id % 7 AS v")
+    for _ in range(2):
+        ids = assign_contiguous_ids(df, "k", n_rows=200)
+        cum = partitioned_cumsum(df, ["k"], "v")
+        assert _stage_tasks(spark, ids.collect) == [4, 1]
+        assert _stage_tasks(spark, cum.collect) == [4, 1]
+
+
 def test_auto_window_rotation_rules(tmp_path):
     """The r4+ check window derives from the official ledger: flagship
     first, then latest-row failures, then rows-only entries that gained an
